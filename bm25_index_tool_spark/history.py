@@ -1,17 +1,33 @@
 """Search-history log (SURVEY.md §2.9 C2, §2.8 P5).
 
 The reference keeps a separate SQLite DB with one row per executed query
-(reference ``core/history.py:48-146``).  Spark-first: an append-only
-parquet log queried with DataFrame ops — `search` replicates the
+(reference ``core/history.py:48-146``).  Here: an append-only parquet log
+queried with DataFrame ops — `search` replicates the
 ``WHERE query LIKE '%pat%' ORDER BY timestamp DESC LIMIT n`` path
 (reference ``core/history.py:190-232``).
+
+Each entry is one single-row parquet part that the driver writes itself
+with pyarrow, like the reference's one local insert: no Spark job runs on
+a search's blocking path.  The part is written under a hidden
+``.part-*.tmp`` name, which Spark's file listing skips, then renamed
+into place, so a reader sees whole entries only and a process that dies
+mid-write leaves nothing visible.  Every part has its own name, so
+concurrent searches (threads or processes) never write the same file.
+The part is not fsync'd, as Spark's writer never fsync'd the parts it
+wrote here: an fsync waits for whatever else the filesystem has queued
+(a just-committed segment, shuffle files), which would put other
+writers' disk time on the search's blocking path.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 HISTORY_SCHEMA = (
@@ -20,12 +36,23 @@ HISTORY_SCHEMA = (
     " exclude_path string"
 )
 
+# Arrow twin of HISTORY_SCHEMA: driver-written parts carry exactly the
+# physical types of Spark-written ones, so old and new parts read as one.
+_ARROW_TYPES = {
+    "long": pa.int64(),
+    "int": pa.int32(),
+    "double": pa.float64(),
+    "string": pa.string(),
+}
+_ARROW_SCHEMA = pa.schema(
+    [(n, _ARROW_TYPES[t]) for n, t in (f.split() for f in HISTORY_SCHEMA.split(","))]
+)
+
 
 class SearchHistory:
     def __init__(self, spark: SparkSession, history_dir: str):
         self.spark = spark
         self.dir = history_dir
-        self._seq = 0
 
     def log(
         self,
@@ -37,9 +64,9 @@ class SearchHistory:
         path_filter: list[str] | None = None,
         exclude_path: list[str] | None = None,
     ) -> None:
-        self._seq += 1
+        entry_id = time.time_ns()  # monotone-enough unique id
         row = (
-            int(time.time_ns()),  # monotone-enough unique id
+            entry_id,
             time.strftime("%Y-%m-%dT%H:%M:%S"),
             json.dumps(indices),
             query,
@@ -49,9 +76,12 @@ class SearchHistory:
             json.dumps(path_filter or []),
             json.dumps(exclude_path or []),
         )
-        self.spark.createDataFrame([row], HISTORY_SCHEMA).write.mode(
-            "append"
-        ).parquet(self.dir)
+        table = pa.table([[v] for v in row], schema=_ARROW_SCHEMA)
+        name = f"part-{entry_id}-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(self.dir, f".{name}.tmp")
+        os.makedirs(self.dir, exist_ok=True)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.dir, name))
 
     def df(self) -> DataFrame:
         try:
@@ -85,7 +115,6 @@ class SearchHistory:
 
         n = self.count()
         shutil.rmtree(self.dir, ignore_errors=True)
-        self._seq = 0
         return n
 
     def stats(self, top_n: int = 5) -> dict:

@@ -132,7 +132,8 @@ class LoadedIndex:
         resolution (~80 ms at 32 shards, growing with shard count).  The
         memo key adds blocks_meta.json's stat to the index-version token:
         build_blocks/update_blocks commit a rebuilt store WITHOUT touching
-        the manifest, and both rewrite the meta file last."""
+        the manifest, and both rewrite the meta file last.  Without a meta
+        file there is no token to key on, so the frame is not memoized."""
         import os
 
         self._revalidate()
@@ -151,7 +152,8 @@ class LoadedIndex:
                 "run blocks.build_blocks (or create_index(build_block_engine=True))"
             )
         df = self.spark.read.parquet(bp)
-        self._frames["_blocks"] = (btok, df)
+        if btok is not None:
+            self._frames["_blocks"] = (btok, df)
         return df
 
     def docs(self) -> DataFrame:

@@ -144,6 +144,23 @@ def test_brute_force_and_lsh_cosine(spark):
     assert all(r["cosine"] >= 0.99 for r in pairs)
 
 
+def test_srp_bucket_helpers_agree(spark):
+    """The F.expr twin gives srp_bucket_col's buckets, also for an empty
+    plane list (which used to build the unparsable SQL ``0 + ``)."""
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0, -0.5]), (1, [-1.0, 2.0, 0.5]), (2, [0.0, 0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    planes = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.2, -0.3, -1.0]]
+    for table_planes in ([], planes[:1], planes):
+        rows = emb.orderBy("vec_id").select(
+            SS.srp_bucket_col(F.col("embedding"), table_planes).alias("col"),
+            SS.srp_bucket_sql_col("`embedding`", table_planes).alias("sql"),
+        ).collect()
+        assert [r["col"] for r in rows] == [r["sql"] for r in rows], table_planes
+    assert [r["sql"] for r in rows] == [5, 2, 0]
+
+
 def test_srp_ann_recall(spark, tmp_path):
     """Recall@20 ≥ 0.9 vs brute force on a CLUSTERED corpus (the regime ANN
     parameters target: near neighbors at cosine ≳ 0.95).  16 bits × 16
